@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-factor data generator mirroring the driver's
@@ -64,14 +64,7 @@ object GenSf {
     require(args.length == 2, "usage: GenSf <outDir> <sf>")
     val out = args(0)
     val sf = args(1).toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
 
     def n(base: Long): Long = math.round(base * sf)
     val nCust = n(150000); val nSupp = n(10000); val nPart = n(200000)

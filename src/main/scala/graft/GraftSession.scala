@@ -39,6 +39,33 @@ object GraftSession {
         .config("spark.ui.enabled", "false"),
       shufflePartitions = Some(cores))
 
+  /** Core count of the harness mains: `SPARK_GRAFT_CPUS`, default 4. */
+  private[graft] lazy val harnessCpus: Int =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The whole configuration of the harness session, as data, so a spec
+    * can pin it without `getOrCreate` (which would hand back the test
+    * JVM's shared session and mask it). This is the judged Bench config:
+    * no `nanosAsLong`, no extensions, no [[enrich]]. */
+  private[graft] def harnessConf(cpus: Int): Map[String, String] = Map(
+    "spark.master" -> s"local[$cpus]",
+    // scale-appropriate at the judged SFs: AQE coalesces the tiny ones
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    // µs parquet output: the oracle engine materializes timestamps at µs;
+    // INT96 (ns) output would make every timestamp column hash-mismatch.
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+    "spark.ui.enabled" -> "false")
+
+  /** The one session of the harness mains (Bench, Verify, Explain, GenSf,
+    * TimeQuery), so what they check, time and generate all runs under the
+    * judged configuration. Not the library session: see [[local]]. */
+  private[graft] def harness(): SparkSession = {
+    val spark = SparkSession.builder().config(harnessConf(harnessCpus)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Register the engine's session-level extensions on an existing session
     * (idempotent): custom aggregates + optimizer rules. */
   def enrich(spark: SparkSession): Unit = {

@@ -1,5 +1,4 @@
 package graft
-import java.nio.file.{Files, Paths}
 
 /** Dump ONLY `SparkEntry.oracleSql` as `<outDir>/oracle_sql.json`, without
   * running any query. Exists so the bench-first discipline (ADVICE r13 #9)
@@ -7,23 +6,12 @@ import java.nio.file.{Files, Paths}
   * window — `tools/compare_baseline.py --live` needs the oracle SQL, and
   * before this the only way to produce it was a full multi-minute Verify
   * run that would itself perturb the measurement window. No SparkSession
-  * is started. */
+  * is started; the file is written by Verify's own writer. */
 object OracleDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir) = args
     new java.io.File(outDir).mkdirs()
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.writeOracleSql(outDir, SparkEntry.oracleSql)
     System.err.println(s"[oracle-dump] ${SparkEntry.oracleSql.size} entries -> $outDir/oracle_sql.json")
   }
 }

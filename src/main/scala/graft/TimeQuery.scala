@@ -9,8 +9,7 @@ object TimeQuery {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("graph_pagerank")
-    val spark = GraftSession.local(32)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     names.foreach { n =>
       val q = SparkEntry.queries(n)
       def once(): Double = {

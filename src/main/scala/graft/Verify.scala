@@ -2,24 +2,33 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare (`tools/check.py`).
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [<name>...]`. Trailing
+  * query names dump only those queries and their oracle SQL, in the same
+  * format, so `tools/check.py` can gate a handful of touched queries
+  * without the full suite. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // µs parquet output: the oracle engine materializes timestamps at µs;
-      // INT96 (ns) output would make every timestamp column hash-mismatch.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    run(spark, sfDir, outDir, SparkEntry.queries, SparkEntry.oracleSql)
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [<name>...]")
+    val (queries, oracleSql) =
+      select(SparkEntry.queries, SparkEntry.oracleSql, args.drop(2).toSet)
+    val spark = GraftSession.harness()
+    run(spark, args(0), args(1), queries, oracleSql)
     spark.stop()
   }
+
+  /** The registry restricted to `names` (all of it when `names` is empty);
+    * an unknown name fails before any session starts. */
+  def select(queries: Map[String, (SparkSession, String) => DataFrame],
+      oracleSql: Map[String, String], names: Set[String])
+      : (Map[String, (SparkSession, String) => DataFrame], Map[String, String]) =
+    if (names.isEmpty) (queries, oracleSql)
+    else {
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      (queries.view.filterKeys(names).toMap, oracleSql.view.filterKeys(names).toMap)
+    }
 
   /** Dump every query's result + the oracle SQL + explicit error
     * artifacts. Factored out of main so the failure-visibility contract
@@ -43,9 +52,23 @@ object Verify {
           msg.take(4000))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    writeOracleSql(outDir, oracleSql)
+    Files.writeString(Paths.get(s"$outDir/errors.json"), jsonObject(errors))
+    System.err.println(
+      s"[verify] ${queries.size - errors.size}/${queries.size} dumped, ${errors.size} failed")
+    errors.toMap
+  }
+
+  /** `<outDir>/oracle_sql.json`: the oracle SQL that `tools/check.py` runs
+    * in DuckDB. */
+  def writeOracleSql(outDir: String, oracleSql: Map[String, String]): Unit =
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonObject(oracleSql))
+
+  /** A JSON object of string pairs. Escapes backslash, quote, and ALL
+    * control chars (<0x20) — a tab or CR in builder-authored SQL would
+    * otherwise make the oracle check's json.load fail and silently zero
+    * the correctness gate. */
+  private def jsonObject(pairs: Iterable[(String, String)]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -55,14 +78,6 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
-    System.err.println(
-      s"[verify] ${queries.size - errors.size}/${queries.size} dumped, ${errors.size} failed")
-    errors.toMap
+    pairs.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 }

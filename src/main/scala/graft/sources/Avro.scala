@@ -491,7 +491,8 @@ object Avro {
     * string lengths, timestamp range) — without materializing a single
     * value. Same verdicts as a full decode at a fraction of the work
     * (no UTF-8 conversion, no Row allocation, string payloads skipped
-    * in O(1)); AvroMeasure pins the ratio. */
+    * in O(1)); the measured ratio is in docs/avro_measure_r15.json
+    * (its measuring main is in git history up to commit ab39133). */
   private[graft] def validateStream(in0: InputStream, declared: StructType,
       file: String): Unit = {
     val in = new DataInputStream(new BufferedInputStream(in0, 1 << 16))
@@ -652,10 +653,10 @@ object Avro {
     * collect is file-COUNT-sized metadata, not data). The validation
     * pass is the structural skip-walk ([[validateStream]]): identical
     * verdicts to a full decode with none of the value materialization,
-    * so the added CPU is a fraction of one decode (AvroMeasure pins
-    * it). That is the price of atomic per-file quarantine with
-    * streaming memory use; use plain [[readAvro]] on trusted
-    * producers. */
+    * so the added CPU is a fraction of one decode (measured in
+    * docs/avro_measure_r15.json, `quarantine_overhead`). That is the
+    * price of atomic per-file quarantine with streaming memory use;
+    * use plain [[readAvro]] on trusted producers. */
   def readAvroWithQuarantine(spark: SparkSession, path: String,
       schema: StructType): (DataFrame, DataFrame) = {
     schema.fields.foreach(f => avroType(f.dataType))

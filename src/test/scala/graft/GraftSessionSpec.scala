@@ -28,4 +28,27 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(s.conf.get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS")
     assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
   }
+
+  test("the harness session pins Bench's config and none of the library session's") {
+    assert(GraftSession.harnessConf(3) == Map(
+      "spark.master" -> "local[3]",
+      "spark.sql.shuffle.partitions" -> "3",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+      "spark.ui.enabled" -> "false"))
+    // a fresh session from that config, made with create(): getOrCreate
+    // would return this JVM's shared session, whose state would mask it
+    spark // the shared session exists first, so it can be restored below
+    val s = org.apache.spark.sql.SparkSession.builder()
+      .config(GraftSession.harnessConf(3)).create()
+    try {
+      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false")
+      assert(s.conf.getOption("spark.sql.extensions").isEmpty)
+      assert(!s.experimental.extraOptimizations.contains(graft.plans.LatestPerKeyRule))
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "3")
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
+  }
 }
